@@ -13,8 +13,8 @@ object BenchOne {
     val rest = if (top.isDefined) args.drop(2) else args.drop(1)
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (rest.length > 1) rest(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val cpus = GraftSession.localCpus
+    val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

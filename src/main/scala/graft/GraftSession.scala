@@ -122,6 +122,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   */
 object GraftSession {
 
+  /** Local cores for the dev mains: `SPARK_GRAFT_CPUS`, else the machine's. */
+  def localCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
+
   def builder(master: String = "local[*]", shufflePartitions: Int = 0,
               appName: String = "graft"): SparkSession.Builder = {
     val parts =

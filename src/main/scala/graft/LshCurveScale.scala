@@ -19,7 +19,8 @@ object LshCurveScale {
     val dirs = if (args.length >= 2) Seq(args(0), args(1))
                else Seq("/root/testdata/sf0.1", "/tmp/sfperf")
     val permille = if (args.length > 2) args(2).toInt else 300
-    val spark = GraftSession.builder("local[32]", 32, "graft-lsh-scale")
+    val cpus = GraftSession.localCpus
+    val spark = GraftSession.builder(s"local[$cpus]", cpus, "graft-lsh-scale")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     dirs.foreach { d =>

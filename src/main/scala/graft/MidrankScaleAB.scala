@@ -20,8 +20,8 @@ object MidrankScaleAB {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toLong).toSeq
       else Seq(1000000L, 4000000L, 16000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val cpus = GraftSession.localCpus
+    val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

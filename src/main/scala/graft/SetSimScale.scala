@@ -16,7 +16,8 @@ object SetSimScale {
   def main(args: Array[String]): Unit = {
     val n0 = if (args.nonEmpty) args(0).toInt else 5000
     val reps = if (args.length > 1) args(1).toInt else 2
-    val spark = GraftSession.builder("local[32]", 32, "graft-setsim-scale")
+    val cpus = GraftSession.localCpus
+    val spark = GraftSession.builder(s"local[$cpus]", cpus, "graft-setsim-scale")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -14,8 +14,8 @@ object Timeit {
     require(args.length >= 2, "usage: Timeit <sfDir> <queryName>...")
     val dir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val cpus = GraftSession.localCpus
+    val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>

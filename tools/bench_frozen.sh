@@ -36,6 +36,9 @@ CP="$FROZEN_CLASSES:/opt/spark/jars/*"
 
 MAIN="${1:-graft.Bench}"
 shift || true
-exec java -cp "$CP" "${ADD_OPENS[@]}" -Xmx48g \
+# heap: half the machine's memory, clamped to 2-8 GiB
+HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+  </proc/meminfo 2>/dev/null || echo 2g)
+exec java -cp "$CP" "${ADD_OPENS[@]}" "-Xmx$HEAP" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   "$MAIN" "$@"

@@ -36,7 +36,10 @@ sbt -batch compile || exit 1
 frozen=$(mktemp -d)/classes
 cp -r target/scala-2.13/classes "$frozen"
 CP="$frozen:/opt/spark/jars/*"
-JAVA=(java -cp "$CP" "${ADD_OPENS[@]}" -Xmx48g
+# heap: half the machine's memory, clamped to 2-8 GiB
+HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+  </proc/meminfo 2>/dev/null || echo 2g)
+JAVA=(java -cp "$CP" "${ADD_OPENS[@]}" "-Xmx$HEAP"
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC)
 
 tmp=$(mktemp -d)
@@ -47,7 +50,7 @@ scales=(0.01)
 
 for sf in "${scales[@]}"; do
   echo "=== verify sf$sf ==="
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
     "${JAVA[@]}" graft.Verify "/root/testdata/sf$sf" "$tmp/verify_$sf" \
     > "$tmp/verify_$sf.log" 2>&1 || { echo "Verify sf$sf FAILED"; tail -20 "$tmp/verify_$sf.log"; fail=1; }
   GRAFT_ENFORCE_TEST_COUNTS=1 \
@@ -66,7 +69,7 @@ EOF
 fi
 
 echo "=== determinism (sf0.01, shuffle-partitions 5 vs 32) ==="
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
   "${JAVA[@]}" graft.Determinism /root/testdata/sf0.01 DETERMINISM.json \
   2> "$tmp/det.log" | tail -2 || { echo "determinism FAILED"; tail -20 "$tmp/det.log"; fail=1; }
 
